@@ -160,12 +160,17 @@ def sort_by_filename(df: DataFrame) -> DataFrame:
 
 
 def bundle_split(df: DataFrame, n: int = 32) -> DataFrame:
-    """O15 — contiguous filename bundles, one per upload task.
+    """O15 — whole-file bundles, one per upload task, in filename order.
 
-    repartitionByRange keeps the filename-contiguity the reference gets from
-    sort + Lists.partition (TickersDataLoader.java:62-69).
+    The reference sorts the files and cuts the list into n contiguous parts
+    (TickersDataLoader.java:62-69). Here ONE hash exchange on `filename`
+    places each file wholly in one bundle, and a per-bundle sort by
+    `filename`, then by every other column, orders it: no sampling job (a
+    range partitioner samples its input first) and a bundle's row order —
+    so its wire bytes — is a pure function of its rows.
     """
-    return df.repartitionByRange(n, "filename")
+    keys = ["filename"] + [c for c in df.columns if c != "filename"]
+    return df.repartition(n, "filename").sortWithinPartitions(*keys)
 
 
 def upload_status_rollup(part_results: DataFrame) -> DataFrame:

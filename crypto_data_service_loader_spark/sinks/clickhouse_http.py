@@ -7,15 +7,17 @@ CompressionHandler.java:48-111 feeds it buffered gzip'd CSV lines. On the
 wire that is `POST /?query=INSERT%20INTO%20t%20FORMAT%20CSV` with a
 `Content-Encoding: gzip` body — plain HTTP, no driver jar needed.
 
-Spark-first shape: `df.mapInArrow` — each of the `num_partitions` output
-partitions (32 mirrors the reference's `divideDataPartsQuantity`) renders
-its rows to CSV lines JVM-side (whole-stage codegen, trailing newline
+Spark-first shape: `df.mapInArrow` — each input partition renders its
+rows to CSV lines JVM-side (whole-stage codegen, trailing newline
 included), so the newline-joined POST payload is *exactly the Arrow string
 column's data buffer* — assembled zero-copy from buffer offsets, no pandas
 conversion, no per-row Python strings — then gzips and POSTs straight
-from the executor. The driver never materializes or relays the data, so
-throughput scales with executors, exactly like adding CompressionHandler
-threads — except distributed. Per-chunk retry mirrors the reference's
+from the executor. By default the sink adds no exchange of its own: the
+upload path hands over its 32 filename bundles (the reference's
+`divideDataPartsQuantity`) already split, and each is posted as it is.
+The driver never materializes or relays the data, so throughput scales
+with executors, exactly like adding CompressionHandler threads — except
+distributed. Per-chunk retry mirrors the reference's
 `maxFlushDataAttempts=3` / `sleepOnReconnectMs=500`
 (application.origin.yaml:15,18) at finer granularity (a chunk, not the
 whole insert, is retried).
@@ -141,13 +143,13 @@ class ClickHouseHttpSink(Sink):
 
     url: str  # e.g. http://host:8123  (database via ?database= on the url)
     table: str
-    #: None = post straight from the input partitioning (no shuffle) — the
-    #: 100 TB shape: one task per upstream split, each streaming its own
-    #: chunks; an int mirrors the reference's fixed 32-bundle split
-    #: (divideDataPartsQuantity) via a round-robin repartition, right when
-    #: the upstream partitioning is skewed or far wider than the server's
-    #: useful insert concurrency
-    num_partitions: int | None = 32
+    #: None (default) = post each input partition as it is (no shuffle):
+    #: the upload path already split its rows into the reference's bundles
+    #: (divideDataPartsQuantity), and a second split here would only throw
+    #: their filename contiguity away. An int re-splits round-robin first,
+    #: for callers whose partitioning is skewed or far wider than the
+    #: server's useful insert concurrency
+    num_partitions: int | None = None
     attempts: int = 3  # reference maxFlushDataAttempts: 3
     sleep_sec: float = 0.5  # reference sleepOnReconnectMs: 500
     gzip_level: int = 6

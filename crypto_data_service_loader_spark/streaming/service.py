@@ -369,9 +369,13 @@ def run_cycle(
             F.col("sink_batch").cast("long").alias("batch_id"),
         )
     )
-    # outcomes is a small driver-built DataFrame; counting it is trivial
-    stats["uploaded"] = outcomes.filter("ok").count()
-    stats["failed"] = outcomes.filter("NOT ok").count()
+    # one pass over the outcomes plan (listing + joins) for both counters
+    counts = outcomes.agg(
+        F.count_if(F.col("ok")).alias("uploaded"),
+        F.count_if(~F.col("ok")).alias("failed"),
+    ).first()
+    stats["uploaded"] = int(counts["uploaded"])
+    stats["failed"] = int(counts["failed"])
 
     # 4. cleanup (reference Flow 4), gated like the reference's 3 h cycle
     if do_cleanup:

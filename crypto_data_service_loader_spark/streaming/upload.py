@@ -4,25 +4,35 @@ Reference: claim READY_FOR_PROCESSING files (optimistic IN_PROGRESS update),
 group by date, join against disk, sort, split into 32 bundles, stream GZIP
 CSV into ClickHouse, then per-bundle FINISHED/ERROR rollup.
 
-Spark-first batch composition (`run_upload_batch`): the claim/sort/split
-become registry transforms + `repartitionByRange`; compression/pipelining
-belong to the sink transport; per-file success tracking uses
-`input_file_name()` lineage with a try/except per file-group inside the
-batch (finer than the reference's per-bundle ERROR granularity).
+Spark-first batch composition (`run_upload_batch`): the claim becomes a
+registry transform; the sort + 32-way split is ONE hash exchange on
+`filename` with a per-partition sort (`bundle_split`), so each bundle holds
+whole files in filename order and the sink posts each bundle as it is —
+the rows travel from the CSV scan to the POSTs through exactly one shuffle,
+with no sampling job (no range partitioner) and no second re-split in the
+sink. Compression/pipelining belong to the sink transport; per-file success
+tracking uses `input_file_name()` lineage with a try/except per file-group
+inside the batch (finer than the reference's per-bundle ERROR granularity).
 
 Scale contract: the claim set is NEVER collected on the driver. The hot
-path collects only two provably tiny sets — distinct claim DATES (bounded
-by the retention window's calendar days, not file count) and distinct sink
-batches (1 + number of crashed predecessor cycles). File selection happens
-distributed: glob the claimed dates' directories, then semi-join the scan's
-`input_file_name()` lineage against the claimed filenames.
+path collects one provably tiny set — the distinct (sink batch, claim
+DATE) pairs: (1 + number of crashed predecessor cycles) × the retention
+window's calendar days, not file count. File selection happens
+distributed: read the claimed dates' directories (flat by the `fs_scan`
+layout contract; one root path per date keeps the file listing on the
+driver below Spark's parallel-listing threshold, so building the read
+starts no listing job), then semi-join the scan's `input_file_name()`
+lineage against the claimed filenames.
 
 Exactly-once contract: every claimed file carries a `sink_batch` — the
 idempotence key its rows are written under. Fresh claims use the current
 cycle's batch; RECLAIMED files (stale IN_PROGRESS from a crashed cycle)
 keep their ORIGINAL claim batch, so the retry overwrites the same sink
 partition that may already hold their rows (crash after sink commit,
-before rollup) instead of duplicating them under a new batch id.
+before rollup) instead of duplicating them under a new batch id. A
+bundle's bytes are a pure function of its rows (hash placement by
+filename, total sort order within the bundle), so a re-upload of the same
+claim re-sends byte-identical chunks under identical dedup tokens.
 """
 
 from __future__ import annotations
@@ -35,11 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.localrel import local_values_df
 
 from ..functions.metrics import observe_counts, observed_metrics
-from ..operators.registry import (
-    bundle_split,
-    filter_status_in,
-    sort_by_filename,
-)
+from ..operators.registry import bundle_split, filter_status_in
 from ..sinks.writers import Sink
 from ..sources.csv_ingest import read_ticks_csv
 
@@ -128,22 +134,24 @@ def run_upload_batch(
         claimed = claimed.withColumn(
             "sink_batch", F.lit(batch_id).cast("long")
         )
-    groups = [
-        r["sink_batch"]
-        for r in claimed.select("sink_batch").distinct().collect()
-    ]
-    if not groups:
+    # the one bounded collect: (sink batch, claim date) pairs
+    dates: dict[int | None, set[str]] = {}
+    for r in claimed.select("sink_batch", "create_date").distinct().collect():
+        dates.setdefault(r["sink_batch"], set()).add(str(r["create_date"]))
+    if not dates:
         return local_values_df(
             spark, [], "filename string, ok boolean, sink_batch long"
         )
     outcomes: DataFrame | None = None
-    for g in sorted(groups, key=lambda x: (x is None, x)):
+    for g in sorted(dates, key=lambda x: (x is None, x)):
         grp = (
             claimed.filter(F.col("sink_batch").isNull())
             if g is None
             else claimed.filter(F.col("sink_batch") == g)
         )
-        out = _upload_group(spark, grp, dir_for_date, sink, bundles, g)
+        out = _upload_group(
+            spark, grp, sorted(dates[g]), dir_for_date, sink, bundles, g
+        )
         outcomes = out if outcomes is None else outcomes.unionByName(out)
     return outcomes
 
@@ -152,22 +160,22 @@ def _basename(col):
     return F.element_at(F.split(col, "/"), -1)
 
 
-def _listed_filenames(spark: SparkSession, globs: list[str]) -> DataFrame:
+def _listed_filenames(spark: SparkSession, dirs: list[str]) -> DataFrame:
     """Distributed listing of the claimed dates' directories: basenames only.
 
     `binaryFile` prunes the `content` column when it isn't selected, so this
-    is a pure FileIndex listing — no file is opened. Per-glob loads so one
-    vanished date directory (retention cleanup raced the claim) empties that
-    date's listing instead of failing the whole group.
+    is a pure FileIndex listing — no file is opened. Per-directory loads so
+    one vanished date directory (retention cleanup raced the claim) empties
+    that date's listing instead of failing the whole group.
     """
     parts: list[DataFrame] = []
-    for g in globs:
+    for d in dirs:
         try:
             parts.append(
-                spark.read.format("binaryFile").load(g).select("path")
+                spark.read.format("binaryFile").load(d).select("path")
             )
         except Exception:  # noqa: BLE001 — date dir deleted: nothing listed
-            logger.warning("claimed date directory missing: %s", g)
+            logger.warning("claimed date directory missing: %s", d)
     if not parts:
         return local_values_df(spark, [], "filename string")
     listed = parts[0]
@@ -176,32 +184,40 @@ def _listed_filenames(spark: SparkSession, globs: list[str]) -> DataFrame:
     return listed.select(_basename(F.col("path")).alias("filename")).distinct()
 
 
+def bundled_ticks(
+    spark: SparkSession, claimed: DataFrame, dirs: list[str], bundles: int
+) -> DataFrame:
+    """The claimed files' valid tick rows, split into `bundles` upload
+    bundles (O15) and carrying their `filename`.
+
+    Reads whole date directories (`dirs`) and keeps only the claimed files
+    by lineage: a date directory may hold same-day files that are not READY
+    yet. Filenames are globally unique (the registry dedups on filename),
+    so the basename suffices. With one root path per date, Spark lists
+    the files on the driver (up to 32 paths), so building the frame runs
+    no Spark job.
+    """
+    ticks = (
+        read_ticks_csv(spark, dirs)
+        .withColumn("filename", _basename(F.col("_source_file")))
+        .drop("_source_file")
+        .join(claimed.select("filename"), "filename", "left_semi")
+    )
+    return bundle_split(ticks, bundles)
+
+
 def _upload_group(
     spark: SparkSession,
     claimed: DataFrame,
+    dates: list[str],
     dir_for_date,
     sink: Sink,
     bundles: int,
     sink_batch,
 ) -> DataFrame:
-    # bounded collect: one row per claimed DATE (calendar-sized)
-    dates = [
-        str(r["create_date"])
-        for r in claimed.select("create_date").distinct().collect()
-    ]
-    globs = [os.path.join(dir_for_date(d), "*") for d in dates]
+    dirs = [dir_for_date(d) for d in dates]
     names = claimed.select("filename")
-
-    ticks = (
-        read_ticks_csv(spark, globs)
-        .withColumn("filename", _basename(F.col("_source_file")))
-        .drop("_source_file")
-        # lineage join: keep only claimed files (the glob may sweep in
-        # same-day files that are not READY yet); filenames are globally
-        # unique (the registry dedups on filename), so basename suffices
-        .join(names, "filename", "left_semi")
-    )
-    ticks = bundle_split(sort_by_filename(ticks), bundles)
+    ticks = bundled_ticks(spark, claimed, dirs, bundles)
     try:
         # task-side accounting: the row count aggregates on the executors
         # during the sink write itself (no second scan of the CSVs — at
@@ -226,7 +242,7 @@ def _upload_group(
         # file deleted from disk after the claim (e.g. retention cleanup)
         # is absent from the listing and must roll up ERROR, not FINISHED —
         # the write committed zero rows for it.
-        listed = _listed_filenames(spark, globs).withColumn(
+        listed = _listed_filenames(spark, dirs).withColumn(
             "_seen", F.lit(True)
         )
         return (

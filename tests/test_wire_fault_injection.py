@@ -55,9 +55,9 @@ def _setup(spark, tmp_path, n_good=40, n_poison=8, **fake_kw):
     fake = FakeClickHouse(fail_marker=b"POISONT", **fake_kw)
     url = fake.start()
     # num_partitions=None: post straight from the bundle partitioning —
-    # bundle_split is filename-contiguous (repartitionByRange), so the
-    # poison file's rows form ONE deterministic chunk and the attempt
-    # budget is countable exactly
+    # bundle_split places each file wholly in one bundle (hash exchange on
+    # filename, sorted within the bundle), so the poison file's rows ride
+    # ONE deterministic chunk and the attempt budget is countable exactly
     sink = ClickHouseHttpSink(url, "tickers_data", num_partitions=None)
     sink.execute(
         "CREATE TABLE IF NOT EXISTS tickers_data (x String) ENGINE = Null"
