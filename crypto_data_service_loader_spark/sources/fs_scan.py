@@ -40,11 +40,14 @@ def scan_directory(
 
     Uses the binaryFile source listing (no file contents are read: we select
     only `path`, and the column-pruned scan skips content). Partition-scales:
-    listing is distributed, one task per listing chunk.
+    listing is distributed, one task per listing chunk. The listing is taken
+    once, at load; a file deleted before the scan runs (again) is skipped,
+    not failed, so a cycle can reuse its scan for cleanup.
     """
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*")
+        .option("ignoreMissingFiles", "true")
         .option("recursiveFileLookup", "false")
         .load(os.path.join(root, "*"))
         .select("path")

@@ -1,6 +1,9 @@
-"""Cleanup job (reference Flow 4 / O23-O24, SURVEY.md §3).
+"""Cleanup job (reference Flow 4 / O22-O24, SURVEY.md §3).
 
-Candidate selection is pure Spark (operators.registry.cleanup_candidates);
+Candidate selection is pure Spark: one O22 min/max pass over the FINISHED
+files feeds both the retention guard and the deletion cutoff (its max is
+the last uploaded date), then operators.registry.cleanup_candidates joins
+the registry with the listing the caller already holds;
 the deletes are driver-side side effects on a collected candidate list —
 deliberately outside the data plane, exactly like the reference
 (CleanupUploadedFilesFlow.java:116-188). ERROR files are kept on disk for
@@ -24,15 +27,20 @@ def run_cleanup(
     fs: DataFrame,
     root: str,
     today: str,
-    last_uploaded_date: str,
 ) -> dict:
     """Returns counters {skipped, deleted, dirs_removed}. Honors the
-    retention guard (min==max / min==today / min+1==today -> skip)."""
+    retention guard (no FINISHED file / min==max / min==today /
+    min+1==today -> skip) and deletes FINISHED files older than the last
+    uploaded date (the guard row's max FINISHED date) minus one day.
+
+    `fs` may be a listing taken earlier in the cycle: a file that vanished
+    since is skipped (`scan_directory` ignores missing files on re-read,
+    and the delete checks existence), not failed."""
     guard = retention_guard(registry, today).first()
     if guard is None or guard["skip_cleanup"] or guard["min_date"] is None:
         return {"skipped": True, "deleted": 0, "dirs_removed": 0}
 
-    cands = cleanup_candidates(fs, registry, last_uploaded_date).collect()
+    cands = cleanup_candidates(fs, registry, str(guard["max_date"])).collect()
     deleted, touched_dirs = 0, set()
     for row in cands:
         d = str(row["create_date"])

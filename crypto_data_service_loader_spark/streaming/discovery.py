@@ -4,27 +4,20 @@ Reference: WatchService + buffer + (size>8192 ∨ 15s) flush + SQL semi-join
 dedup + TSV INSERT (SaveNewFilesToDbFlow.java). Spark-first: the streaming
 file source over `root/*/` IS the watcher+buffer+backfill (its initial
 listing is the backfill scan O1; micro-batches are the flush; checkpointing
-is the restart story). Only the dedup+append survives as code, inside
-foreachBatch.
+is the restart story; the glob makes day rollover free). The dedup+append
+runs inside the service epoch (`streaming.service.start_service_stream`),
+the same composition as the polling cycle.
 
 Scale: the file source keeps seen-file state in the checkpoint (compaction
-handles millions of entries); `maxFilesPerTrigger` paces ingest; the
-anti-join broadcasts the micro-batch against the registry.
+handles millions of entries); `maxFilesPerTrigger` paces ingest.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, types as T
 
-from ..functions.localrel import local_values_df
-from pyspark.sql.streaming import StreamingQuery
-
-from pyspark.sql import types as T
-
-from ..operators.registry import dedup_new_files
-from ..schemas import REGISTRY
 from ..sources.fs_scan import path_to_registry_cols
 
 #: binaryFile's fixed schema — streaming sources require it explicitly.
@@ -52,48 +45,3 @@ def discovered_files_stream(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     files = reader.load(os.path.join(root, "*"))
     return path_to_registry_cols(files.select("path"))
-
-
-def start_discovery(
-    spark: SparkSession,
-    root: str,
-    registry_path: str,
-    checkpoint: str,
-    trigger_seconds: int = 15,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 10_000,
-) -> StreamingQuery:
-    """Run discovery: each micro-batch anti-joins the current registry and
-    appends only novel filenames (the reference's only double-registration
-    guard, SaveNewFilesToDbFlow.java:222-236, kept batch-atomic here).
-
-    trigger_seconds=15 mirrors `flushDiscoveredFilesTimeoutSec`;
-    available_now=True gives hermetic drain-everything semantics for tests.
-    """
-
-    def _flush(batch: DataFrame, batch_id: int) -> None:
-        spark_ = batch.sparkSession
-        try:
-            registry = spark_.read.schema(REGISTRY).parquet(registry_path)
-        except Exception:  # first batch: registry does not exist yet
-            registry = local_values_df(spark_, [], REGISTRY)
-        novel = dedup_new_files(batch, registry.select("filename"))
-        (
-            novel.select("filename", "create_date", "status")
-            .write.mode("append")
-            .parquet(registry_path)
-        )
-
-    # pacing: a first start against a huge backfill tree must not process
-    # millions of files in one epoch — cap files per micro-batch
-    stream = discovered_files_stream(spark, root, max_files_per_trigger)
-    writer = (
-        stream.writeStream.foreachBatch(_flush)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

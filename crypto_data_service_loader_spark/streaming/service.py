@@ -11,6 +11,20 @@ Cycle semantics (reference MainApplication.java:54-91):
                   per-file FINISHED/ERROR rollup
   4. cleanup    — delete FINISHED files older than the retention window
 
+One composition, two callers: the polling `run_cycle` and the streaming
+`start_service_stream` epoch both run `_advance` (discover, progress and
+claim) and `_rollup` (FINISHED/ERROR); they differ only in where the
+candidate files come from — a full directory scan, or the file source's
+micro-batch of newly appeared files.
+
+One state read per cycle: `_advance` compacts the event log once, applies
+the discover and progress steps to that state and pins the result with
+`localCheckpoint`; the discover, progress and claim events are all derived
+from the pin. The pin, not `.cache()`, is what lets the appends that follow
+leave the steps' inputs alone: a cached relation over the log path is
+re-materialized by the append's recacheByPath with a fresh listing (a step
+would see its own output), while a checkpoint is a frozen copy of the rows.
+
 State lives in an append-only registry event log (parquet, date-partitioned
 at scale); every step appends events keyed by (cycle seq, batch id) so a
 replayed cycle is idempotent.
@@ -18,15 +32,13 @@ replayed cycle is idempotent.
 
 from __future__ import annotations
 
-import logging
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.localrel import local_values_df
 
 from ..operators.registry import (
-    apply_status_update,
     current_state,
     dedup_new_files,
     transition_statuses,
@@ -37,8 +49,6 @@ from ..sinks.writers import Sink
 from ..sources.fs_scan import scan_directory
 from .cleanup import run_cleanup
 from .upload import claim_ready_files, run_upload_batch
-
-logger = logging.getLogger(__name__)
 
 
 def _stable_cycle_base(
@@ -157,6 +167,84 @@ class RegistryLog:
         return n
 
 
+def _events(
+    rows: DataFrame, status: Column, seq: int, batch_id: Column
+) -> DataFrame:
+    """One step's registry events, as ONE file: a cycle's events are few
+    next to the log, and every state read pays per log file."""
+    return rows.select(
+        "filename", "create_date", status.alias("status"),
+        F.lit(seq).cast("long").alias("seq"),
+        batch_id.cast("long").alias("batch_id"),
+    ).coalesce(1)
+
+
+def _advance(
+    log: RegistryLog, candidates: DataFrame, today: str, cycle_id: int
+) -> tuple[DataFrame, dict]:
+    """Discover, progress and claim over ONE read of the registry state.
+
+    The state plus the novel candidates (`_new`, registered as DISCOVERED)
+    goes through the status machine and is pinned once; `_was` keeps each
+    file's status from before the progress step. Three event sets come off
+    the pin, appended in order: discover (seq_base), progress (seq_base+1),
+    claim (seq_base+2). Claiming from the pin is exact: the progress step
+    only moves DISCOVERED/DOWNLOADING rows, never the IN_PROGRESS/FINISHED
+    rows or batch ids that the reclaim and companion logic reads.
+
+    Returns the pinned claim and the {discovered, progressed} counters.
+    """
+    seq_base = cycle_id * 10
+    cycle = F.lit(cycle_id)
+    state = log.state()
+    novel = dedup_new_files(candidates, state.select("filename")).select(
+        "filename", "create_date", F.lit("DISCOVERED").alias("status"),
+        F.lit(seq_base).cast("long").alias("seq"),
+        cycle.cast("long").alias("batch_id"), F.lit(True).alias("_new"),
+    )
+    pin = transition_statuses(
+        state.withColumn("_new", F.lit(False)).unionByName(novel)
+        .withColumn("_was", F.col("status")),
+        today,
+    ).localCheckpoint(eager=True)
+    progressed = F.col("status") != F.col("_was")
+    log.append(_events(pin.filter("_new"), F.lit("DISCOVERED"), seq_base, cycle))
+    log.append(_events(pin.filter(progressed), F.col("status"), seq_base + 1, cycle))
+    # one cycle's claim set is small: one partition keeps the upload's
+    # collects and joins over it to one task each
+    ready = claim_ready_files(
+        pin, current_batch=cycle_id
+    ).coalesce(1).localCheckpoint(eager=True)
+    # the claim event carries sink_batch, NOT cycle_id: reclaimed files
+    # keep their original claim batch across any number of retries, so
+    # every re-upload overwrites the same idempotent sink partition
+    log.append(_events(
+        ready, F.lit("IN_PROGRESS"), seq_base + 2, F.col("sink_batch")
+    ))
+    counts = pin.agg(
+        F.count_if("_new").alias("discovered"),
+        F.count_if(progressed).alias("progressed"),
+    ).first()
+    return ready, counts.asDict()
+
+
+def _rollup(
+    log: RegistryLog, ready: DataFrame, outcomes: DataFrame, cycle_id: int
+) -> None:
+    """Per-file FINISHED/ERROR events (seq_base+3). They record sink_batch
+    (not cycle_id) as batch_id: that is what makes a sink batch's
+    membership recoverable, so a later reclaim can rewrite the WHOLE
+    partition (see claim_ready_files)."""
+    finished = (
+        upload_status_rollup(outcomes)
+        .join(outcomes.select("filename", "sink_batch").distinct(), "filename")
+        .join(ready.select("filename", "create_date"), "filename")
+    )
+    log.append(_events(
+        finished, F.col("status"), cycle_id * 10 + 3, F.col("sink_batch")
+    ))
+
+
 def start_service_stream(
     spark: SparkSession,
     root: str,
@@ -170,8 +258,9 @@ def start_service_stream(
     compact_every: int = 50,
 ):
     """Structured-Streaming service mode: the discovery stream drives the
-    WHOLE pipeline — each micro-batch of newly-appeared files is registered,
-    progressed, uploaded, and rolled up inside one foreachBatch epoch.
+    WHOLE pipeline — each micro-batch of newly-appeared files runs the
+    same `_advance` + upload + `_rollup` composition as `run_cycle`
+    inside one foreachBatch epoch.
 
     Differences from the polling `run_cycle`: the file source's checkpoint
     replaces the backfill scan (restart = resume, no re-listing), and epoch
@@ -200,66 +289,13 @@ def start_service_stream(
         spark_ = batch.sparkSession
         log = RegistryLog(spark_, registry_path)
         cycle_id = base + epoch_id
-        seq_base = cycle_id * 10
         epoch_today = today or _dt.date.today().isoformat()
-        # register the epoch's novel files
-        novel = dedup_new_files(batch, log.state().select("filename"))
-        log.append(
-            novel.select(
-                "filename", "create_date", "status",
-                F.lit(seq_base).cast("long").alias("seq"),
-                F.lit(cycle_id).cast("long").alias("batch_id"),
-            )
-        )
-        # progress + upload, same composition as the polling cycle
-        cur = log.state()
-        changed = (
-            transition_statuses(cur, epoch_today).alias("a")
-            .join(cur.select("filename", F.col("status").alias("old_status")),
-                  "filename")
-            .filter(F.col("status") != F.col("old_status"))
-            .select(
-                "filename", "create_date", "status",
-                F.lit(seq_base + 1).cast("long").alias("seq"),
-                F.lit(cycle_id).cast("long").alias("batch_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        log.append(changed)
-        ready = claim_ready_files(
-            log.state(), current_batch=cycle_id
-        ).localCheckpoint(eager=True)
-        # the claim event carries sink_batch, NOT cycle_id: reclaimed files
-        # keep their original claim batch across any number of retries, so
-        # every re-upload overwrites the same idempotent sink partition
-        log.append(
-            ready.select(
-                "filename", "create_date", F.lit("IN_PROGRESS").alias("status"),
-                F.lit(seq_base + 2).cast("long").alias("seq"),
-                F.col("sink_batch").cast("long").alias("batch_id"),
-            )
-        )
+        ready, _ = _advance(log, batch, epoch_today, cycle_id)
         outcomes = run_upload_batch(
             spark_, ready, lambda d: os.path.join(root, d), sink,
             batch_id=cycle_id,
         )
-        # rollup events record sink_batch (not cycle_id) as batch_id: that
-        # is what makes a sink batch's membership recoverable, so a later
-        # reclaim can rewrite the WHOLE partition (see claim_ready_files)
-        finished = (
-            upload_status_rollup(outcomes)
-            .join(outcomes.select("filename", "sink_batch").distinct(),
-                  "filename")
-            .join(ready.select("filename", "create_date"), "filename",
-                  "inner")
-        )
-        log.append(
-            finished.select(
-                "filename", "create_date", "status",
-                F.lit(seq_base + 3).cast("long").alias("seq"),
-                F.col("sink_batch").cast("long").alias("batch_id"),
-            )
-        )
+        _rollup(log, ready, outcomes, cycle_id)
         if compact_every and cycle_id > 0 and cycle_id % compact_every == 0:
             log.compact()  # safe here: no concurrent reader inside the epoch
 
@@ -287,88 +323,19 @@ def run_cycle(
 ) -> dict:
     """One full service cycle; returns counters for observability."""
     log = RegistryLog(spark, registry_path)
-    seq_base = cycle * 10
-    stats: dict[str, int] = {}
-
-    def scan_or_empty() -> DataFrame:
+    try:
+        fs = scan_directory(spark, root)  # load() lists eagerly
+    except Exception:  # noqa: BLE001
         # an empty/missing tree is a quiet cycle, not a failure (the
         # reference falls back and retries, SaveNewFilesToDbFlow.java:139-163)
-        try:
-            return scan_directory(spark, root)  # load() lists eagerly
-        except Exception:  # noqa: BLE001
-            return local_values_df(
-                spark, [], "filename string, create_date date, status string"
-            )
-
-    # 1. discover (reference Flow 1: backfill scan + dedup + insert).
-    # localCheckpoint pins each step's delta BEFORE appending: .cache()
-    # would be re-materialized by the append's recacheByPath with a fresh
-    # file listing (the step would see its own output), and an unpinned
-    # plan would re-run the whole scan+anti-join for the counter.
-    novel = dedup_new_files(scan_or_empty(), log.state().select("filename"))
-    new_events = novel.select(
-        "filename",
-        "create_date",
-        F.lit("DISCOVERED").alias("status"),
-        F.lit(seq_base).cast("long").alias("seq"),
-        F.lit(cycle).cast("long").alias("batch_id"),
-    ).localCheckpoint(eager=True)
-    log.append(new_events)
-    stats["discovered"] = new_events.count()
-
-    # 2. progress (reference Flow 2: the status-machine CASE)
-    cur = log.state()
-    advanced = transition_statuses(cur, today)
-    changed = (
-        advanced.alias("a")
-        .join(cur.select("filename", F.col("status").alias("old_status")), "filename")
-        .filter(F.col("status") != F.col("old_status"))
-        .select(
-            "filename", "create_date", "status",
-            F.lit(seq_base + 1).cast("long").alias("seq"),
-            F.lit(cycle).cast("long").alias("batch_id"),
+        fs = local_values_df(
+            spark, [], "filename string, create_date date, status string"
         )
-        .localCheckpoint(eager=True)
-    )
-    log.append(changed)
-    stats["progressed"] = changed.count()
-
-    # 3. upload (reference Flow 3: claim -> bulk load -> rollup; stale
-    # IN_PROGRESS claims orphaned by a crashed older cycle are reclaimed)
-    ready = claim_ready_files(
-        log.state(), current_batch=cycle
-    ).localCheckpoint(eager=True)
-    # sink_batch (not cycle) on the claim event: see the streaming epoch —
-    # reclaimed files must retry under their original idempotence key
-    log.append(
-        ready.select(
-            "filename", "create_date", F.lit("IN_PROGRESS").alias("status"),
-            F.lit(seq_base + 2).cast("long").alias("seq"),
-            F.col("sink_batch").cast("long").alias("batch_id"),
-        )
-    )
+    ready, stats = _advance(log, fs, today, cycle)
     outcomes = run_upload_batch(
-        spark,
-        ready,
-        lambda d: os.path.join(root, d),
-        sink,
-        batch_id=cycle,
+        spark, ready, lambda d: os.path.join(root, d), sink, batch_id=cycle
     )
-    # rollup records sink_batch as batch_id — reclaim-membership recovery
-    # (see claim_ready_files' companion re-claim)
-    rolled = upload_status_rollup(outcomes).join(
-        outcomes.select("filename", "sink_batch").distinct(), "filename"
-    )
-    finished = rolled.join(
-        ready.select("filename", "create_date"), "filename", "inner"
-    )
-    log.append(
-        finished.select(
-            "filename", "create_date", "status",
-            F.lit(seq_base + 3).cast("long").alias("seq"),
-            F.col("sink_batch").cast("long").alias("batch_id"),
-        )
-    )
+    _rollup(log, ready, outcomes, cycle)
     # one pass over the outcomes plan (listing + joins) for both counters
     counts = outcomes.agg(
         F.count_if(F.col("ok")).alias("uploaded"),
@@ -377,13 +344,8 @@ def run_cycle(
     stats["uploaded"] = int(counts["uploaded"])
     stats["failed"] = int(counts["failed"])
 
-    # 4. cleanup (reference Flow 4), gated like the reference's 3 h cycle
+    # 4. cleanup (reference Flow 4), gated like the reference's 3 h cycle;
+    # the cycle's own scan is the on-disk side (no second listing)
     if do_cleanup:
-        state = log.state()
-        fs = scan_or_empty().select("filename", "create_date")
-        last = state.filter(F.col("status") == "FINISHED").agg(
-            F.max("create_date")
-        ).first()[0]
-        if last is not None:
-            stats.update(run_cleanup(state, fs, root, today, str(last)))
+        stats.update(run_cleanup(log.state(), fs, root, today))
     return stats

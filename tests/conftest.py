@@ -82,7 +82,7 @@ _QUICK_TESTS = {
     "test_service_e2e.py::test_service_cycles_end_to_end",
     "test_sketch.py::test_hll_merge_equals_whole",
     "test_stateful_streaming.py::test_stateful_running_totals_stream",
-    "test_streaming_pipeline.py::test_discovery_stream_registers_new_files_once",
+    "test_streaming_pipeline.py::test_cleanup_deletes_finished_keeps_error",
     "test_substr_index.py::test_substr_index_probe_matches_inline_union",
     "test_suite_oracle.py::test_every_query_has_callable_shape",
     "test_text_index.py::test_index_query_equals_inline_bm25",

@@ -142,7 +142,10 @@ def test_stale_in_progress_files_are_reclaimed(spark, tmp_path):
 def test_streaming_service_mode(spark, tmp_path):
     """Full pipeline driven by the discovery STREAM: files appearing in the
     tree are registered, progressed, uploaded, and rolled up within
-    foreachBatch epochs; restart resumes from the checkpoint."""
+    foreachBatch epochs; restart resumes from the checkpoint, and a date
+    directory created after the stream started is picked up by the globbed
+    source (day rollover — the reference needed an explicit watcher
+    re-init, SaveNewFilesToDbFlow.java:254-272)."""
     from crypto_data_service_loader_spark.streaming.service import (
         start_service_stream,
     )
@@ -161,16 +164,51 @@ def test_streaming_service_mode(spark, tmp_path):
     assert state == {"AAA_PST_2024-03-13": "FINISHED"}
     assert sum(len(b[1]) for b in sink.batches) == 2
 
-    # new file appears; a restarted stream processes only the delta
-    _mk_tree(root, {"2024-03-13": {"BBB_PST_2024-03-13": [VALID]}})
+    # midnight: a new date directory appears; a restarted stream on the
+    # next day processes only the delta
+    _mk_tree(root, {"2024-03-14": {"BBB_PST_2024-03-14": [VALID]}})
     q2 = start_service_stream(spark, root, reg, sink, ckpt,
-                              today="2024-03-14", available_now=True)
+                              today="2024-03-15", available_now=True)
     q2.awaitTermination(180)
     state2 = {r["filename"]: r["status"]
               for r in RegistryLog(spark, reg).state().collect()}
-    assert state2["BBB_PST_2024-03-13"] == "FINISHED"
+    assert state2["BBB_PST_2024-03-14"] == "FINISHED"
     assert state2["AAA_PST_2024-03-13"] == "FINISHED"
     assert sum(len(b[1]) for b in sink.batches) == 3
+
+
+def test_cycle_reads_registry_state_once(spark, tmp_path, monkeypatch):
+    """One compaction of the event log per cycle: discover, progress and
+    claim all derive from a single `RegistryLog.state()` read, in the
+    polling cycle and in every streaming epoch alike."""
+    from crypto_data_service_loader_spark.streaming.service import (
+        start_service_stream,
+    )
+
+    calls = []
+    real_state = RegistryLog.state
+
+    def counted_state(self):
+        calls.append(self.path)
+        return real_state(self)
+
+    root = str(tmp_path / "data")
+    _mk_tree(root, {"2024-03-13": {"AAA_PST_2024-03-13": [VALID]},
+                    "2024-03-14": {"BBB_PST_2024-03-14": [VALID]}})
+    monkeypatch.setattr(RegistryLog, "state", counted_state)
+    s = run_cycle(spark, root, str(tmp_path / "reg"), MemorySink(),
+                  today="2024-03-14", cycle=0)
+    assert s["discovered"] == 2 and s["uploaded"] == 1
+    assert len(calls) == 1
+
+    calls.clear()
+    q = start_service_stream(spark, root, str(tmp_path / "reg2"), MemorySink(),
+                             str(tmp_path / "ckpt"), today="2024-03-15",
+                             available_now=True, max_files_per_trigger=1)
+    q.awaitTermination(180)
+    epochs = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(epochs) == 2  # one file per epoch
+    assert len(calls) == len(epochs)
 
 
 def test_cli_entrypoint(spark, tmp_path):

@@ -1,7 +1,8 @@
 """End-to-end pipeline tests over a real temp directory tree — mirrors the
-reference's filesystem-integration tests (SURVEY.md §5.2): discovery
-streaming, CSV upload batch with per-file rollup, failure injection, and
-cleanup with status-dependent keep/delete."""
+reference's filesystem-integration tests (SURVEY.md §5.2): CSV upload
+batch with per-file rollup, failure injection, and cleanup with
+status-dependent keep/delete. Discovery streaming is covered end to end
+by tests/test_service_e2e.py::test_streaming_service_mode."""
 
 from __future__ import annotations
 
@@ -19,7 +20,6 @@ from crypto_data_service_loader_spark.schemas import REGISTRY
 from crypto_data_service_loader_spark.sinks.writers import MemorySink
 from crypto_data_service_loader_spark.sources.csv_ingest import read_ticks_csv
 from crypto_data_service_loader_spark.streaming.cleanup import run_cleanup
-from crypto_data_service_loader_spark.streaming.discovery import start_discovery
 from crypto_data_service_loader_spark.streaming.upload import run_upload_batch
 
 D = datetime.date
@@ -34,29 +34,6 @@ def _mk_tree(root, dates_files):
         for name, lines in files.items():
             with open(os.path.join(root, d, name), "w") as fh:
                 fh.write("\n".join(lines))
-
-
-def test_discovery_stream_registers_new_files_once(spark, tmp_path):
-    root = str(tmp_path / "data")
-    reg_path = str(tmp_path / "registry")
-    ckpt = str(tmp_path / "ckpt")
-    _mk_tree(root, {"2024-03-14": {"AAA_PST_2024-03-14": [VALID], "BBB_PST_2024-03-14": [VALID]}})
-
-    q = start_discovery(spark, root, reg_path, ckpt, available_now=True)
-    q.awaitTermination(120)
-    reg = spark.read.schema(REGISTRY).parquet(reg_path)
-    assert {r["filename"] for r in reg.collect()} == {
-        "AAA_PST_2024-03-14", "BBB_PST_2024-03-14"
-    }
-    assert {str(r["create_date"]) for r in reg.collect()} == {"2024-03-14"}
-
-    # second file appears; restart drains only the delta, dedup keeps one row each
-    _mk_tree(root, {"2024-03-14": {"CCC_PST_2024-03-14": [VALID]}})
-    q2 = start_discovery(spark, root, reg_path, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    reg2 = spark.read.schema(REGISTRY).parquet(reg_path)
-    assert reg2.count() == 3
-    assert reg2.groupBy("filename").count().filter("count > 1").count() == 0
 
 
 def test_csv_read_drops_invalid_lines(spark, tmp_path):
@@ -131,7 +108,7 @@ def test_cleanup_deletes_finished_keeps_error(spark, tmp_path):
          ("NEW_FIN", D(2024, 3, 13))],
         "filename string, create_date date",
     )
-    out = run_cleanup(reg, fs, root, today="2024-03-14", last_uploaded_date="2024-03-13")
+    out = run_cleanup(reg, fs, root, today="2024-03-14")
     assert out == {"skipped": False, "deleted": 1, "dirs_removed": 0}
     assert not os.path.exists(os.path.join(root, "2024-03-10", "OLD_FIN"))
     assert os.path.exists(os.path.join(root, "2024-03-10", "OLD_ERR"))  # kept
