@@ -64,6 +64,48 @@ def test_upload_fallback_preserves_all_files_under_idempotent_sink(spark, tmp_pa
     assert sink.read(spark).count() == 5  # ALL rows survived, not just BBB's
 
 
+def test_discovery_day_rollover(spark, tmp_path):
+    """New date-dir appearing after the stream started is picked up by the
+    globbed source — the reference needed explicit watcher re-init
+    (SaveNewFilesToDbFlow.java:254-272); the glob makes rollover free."""
+    import os
+
+    from crypto_data_service_loader_spark.schemas import REGISTRY
+    from crypto_data_service_loader_spark.streaming.discovery import (
+        discovered_files_stream,
+    )
+
+    root = str(tmp_path / "data")
+    reg, ckpt = str(tmp_path / "reg"), str(tmp_path / "ck")
+
+    def run_once():
+        q = (
+            discovered_files_stream(spark, root)
+            .writeStream.format("parquet")
+            .option("path", reg)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    os.makedirs(os.path.join(root, "2024-03-14"))
+    with open(os.path.join(root, "2024-03-14", "A_PST_2024-03-14"), "w") as fh:
+        fh.write("x")
+    run_once()
+
+    # midnight: a new dir appears
+    os.makedirs(os.path.join(root, "2024-03-15"))
+    with open(os.path.join(root, "2024-03-15", "B_PST_2024-03-15"), "w") as fh:
+        fh.write("y")
+    run_once()
+
+    got = [(r["filename"], str(r["create_date"]))
+           for r in spark.read.schema(REGISTRY).parquet(reg).collect()]
+    assert sorted(got) == [("A_PST_2024-03-14", "2024-03-14"),
+                           ("B_PST_2024-03-15", "2024-03-15")]
+
+
 def test_jdbc_sink_options_repartition_and_retry(spark):
     """ClickHouseJdbcSink without a driver jar: option assembly, the
     numPartitions repartition, and the retry wrap are all pinned at the
